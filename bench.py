@@ -316,7 +316,7 @@ _SF5_QUERIES = (
 # engaging as replicated boilerplate crosses the threshold).
 
 
-def _sf5_section(spark, base_sf_dir: str, reset_caches) -> dict:
+def _sf5_section(spark, base_sf_dir: str) -> dict:
     """Three-point scaling curve (1x / 10x / 50x) for the flagship
     document/event operators — the extrapolation evidence a single
     10x ratio can't give: if wall grows ~linearly from 10x to 50x the
@@ -326,6 +326,7 @@ def _sf5_section(spark, base_sf_dir: str, reset_caches) -> dict:
     builder-measured into the committed snapshot; per-round driver
     runs keep the 10x sweep only)."""
     from catalyst_spark.queries import ALL_QUERIES
+    from catalyst_spark.queries.pipeline import reset_session_caches
 
     sf1_dir = str(REPO / "benchdata" / "sf1")
     sf5_dir = str(REPO / "benchdata" / "sf5")
@@ -339,7 +340,7 @@ def _sf5_section(spark, base_sf_dir: str, reset_caches) -> dict:
                    ("sf5", sf5_dir)):
         samples: dict[str, list[float]] = {n: [] for n in _SF5_QUERIES}
         for _ in range(trials):
-            reset_caches()
+            reset_session_caches(spark)
             for name in _SF5_QUERIES:
                 t0 = time.perf_counter()
                 ALL_QUERIES[name](spark, d).write.format(
@@ -367,7 +368,7 @@ def _sf5_section(spark, base_sf_dir: str, reset_caches) -> dict:
     return out
 
 
-def _stream_scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
+def _stream_scale_section(spark, base_sf_dir: str) -> dict:
     """Ingest-side scale evidence the batch curve can't give (VERDICT
     r12 item 8): replay ONE FIXED probe shard (the base tier's
     doc_id % 7 == 0 documents, identical bytes at every tier) through
@@ -392,6 +393,7 @@ def _stream_scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
         shard_dedup_static_index,
         stream_shard_dedup_classify,
     )
+    from catalyst_spark.queries.pipeline import reset_session_caches
     from catalyst_spark.tables import load as _load
 
     sf1_dir = str(REPO / "benchdata" / "sf1")
@@ -418,7 +420,7 @@ def _stream_scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
     try:
         for tag, d in (("sf0.1", base_sf_dir), ("sf1", sf1_dir),
                        ("sf5", sf5_dir)):
-            reset_caches()
+            reset_session_caches(spark)
             fp_index, band_index, hset_index = shard_dedup_static_index(
                 spark, d)
             fp_index = fp_index.persist()
@@ -996,7 +998,7 @@ _SCALE_QUERIES = _SCALE_QUERIES + (
 # moves every family < 6x wall at 10x rows.
 
 
-def _scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
+def _scale_section(spark, base_sf_dir: str) -> dict:
     """Time the dedup/similarity family at sf0.1 and at the derived 10x
     corpus, with measured candidate-pair counts for the two blocking
     schemes (MinHash bands over documents, SRP-LSH buckets over
@@ -1006,6 +1008,7 @@ def _scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
     from catalyst_spark.queries.pipeline import (
         _minhash_sig_cand,
         dedup_embedding_lsh,
+        reset_session_caches,
     )
 
     sf1_dir = str(REPO / "benchdata" / "sf1")
@@ -1032,7 +1035,7 @@ def _scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
         for t_i in range(trials):
             if t_i and time.perf_counter() - sec_t0 > sec_deadline:
                 break
-            reset_caches()
+            reset_session_caches(spark)
             for name in _SCALE_QUERIES:
                 t0 = time.perf_counter()
                 df = ALL_QUERIES[name](spark, d)
@@ -1125,7 +1128,7 @@ def _scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
             all_vec_pairs=all_vec,
         )
         out[tag] = sec
-        reset_caches()
+        reset_session_caches(spark)
     out["note"] = (
         "sf1 = ten families, each an exact internal copy of the sf0.1 dup "
         "structure (disjoint token spaces; sign-flipped embeddings). "
@@ -1208,7 +1211,7 @@ def _ensure_vec100k(spark, src_dir: str, dst_dir: str) -> None:
         f.write("ok\n")
 
 
-def _rek64_section(spark, base_sf_dir: str, reset_caches) -> dict:
+def _rek64_section(spark, base_sf_dir: str) -> dict:
     """VERDICT r9 item 7: one SCAN-DOMINATED measurement of the re-k
     schedule — the IVF+SQ8 rungs at a 100k-vector corpus, the first
     tier where _serving_k returns 64 and the in-cell scan term (not
@@ -1237,6 +1240,7 @@ def _rek64_section(spark, base_sf_dir: str, reset_caches) -> dict:
         _with_norm,
         ann_sq8_ivf_rek_topk,
         ann_sq8_ivf_topk,
+        reset_session_caches,
     )
     from catalyst_spark.tables import load
 
@@ -1257,16 +1261,16 @@ def _rek64_section(spark, base_sf_dir: str, reset_caches) -> dict:
     wall = {}
     for name, fn in (("fixed_k", ann_sq8_ivf_topk),
                      ("rek", ann_sq8_ivf_rek_topk)):
-        reset_caches()
+        reset_session_caches(spark)
         fn(spark, vec_dir).write.format("noop").mode("overwrite").save()
         ts = []
         for _ in range(trials):
-            reset_caches()
+            reset_session_caches(spark)
             t0 = time.perf_counter()
             fn(spark, vec_dir).write.format("noop").mode("overwrite").save()
             ts.append(time.perf_counter() - t0)
         wall[name] = round(min(ts), 3)
-    reset_caches()
+    reset_session_caches(spark)
 
     fixed_cand = _sq8_ivf_cand(spark, vec_dir, "full", _KMEANS_K).count()
     rek_cand = _sq8_ivf_cand(spark, vec_dir, rek_tag, rek_k).count()
@@ -1296,11 +1300,10 @@ def _rek64_section(spark, base_sf_dir: str, reset_caches) -> dict:
     probes = _probe_topn(spark, vec_dir, v, 4, tag=rek_tag,
                          k=rek_k).persist()
     probes.count()
-    members = _coarse_assign(spark, vec_dir, v, tag=rek_tag,
-                             k=rek_k).select(
+    members = _coarse_assign(spark, vec_dir, rek_tag, rek_k).select(
         F.col("vec_id").alias("n_id"), "c_id"
     )
-    codes = _sq8_codes(spark, vec_dir, v)
+    codes = _sq8_codes(spark, vec_dir)
     sub_mod = 2000
     qn = _with_norm(emb.where(f"vec_id % {sub_mod} = 0"), "q_id", "vq")
     cn = _with_norm(emb, "n_id", "vc")
@@ -1371,33 +1374,8 @@ def _rek64_section(spark, base_sf_dir: str, reset_caches) -> dict:
         "validates the schedule is its GROWTH along the sweep at "
         "linear scan cost, not its level."
     )
-    reset_caches()
+    reset_session_caches(spark)
     return sec
-
-
-_SHARED_BUILDS = (
-    "window_table",
-    "minhash_signatures",
-    "simhash_signatures",
-    "prefix_verified_pairs",
-    "cc_labels",
-    "mh_verified_pairs",
-    "coarse_kmeans_assign",
-    "rek_kmeans_assign",
-    "pq_codes",
-    "rpq_codes",
-    "pq_adc_topk",
-    "brute_topk_baseline",
-    "ivf_topk",
-    "sq8_topk",
-    "sq8_ivf_topk",
-    "sq8_ivf_rek_topk",
-    "ivfpq_residual_topk",
-    "ivfpq_rerank_shortlist",
-    "fusion_lex_arm",
-    "pr_chain",
-    "phash_pairs",
-)
 
 
 def _committed_round_summary():
@@ -1436,99 +1414,27 @@ def _committed_round_summary():
 
 def _time_shared_builds(spark, sf_dir: str) -> dict[str, float]:
     """Materialize every session-shared build under its own named timer
-    (VERDICT r6 item 5). Family-fronting order previously attributed
-    e.g. the window-table persist to whichever family member ran first,
-    so a rotation-driven registry reorder could masquerade as a
-    per-query regression in round-over-round diffs (the r6
-    window_overlap 2.2x slot artifact). With the builds pre-timed here,
-    the per-query numbers are build-free marginal costs whose
-    attribution can't shift between rounds."""
-    from pyspark.sql import functions as F
+    (VERDICT r6 item 5), in the registry's declaration order.
+    Family-fronting order previously attributed e.g. the window-table
+    persist to whichever family member ran first, so a rotation-driven
+    registry reorder could masquerade as a per-query regression in
+    round-over-round diffs (the r6 window_overlap 2.2x slot artifact).
+    With the builds pre-timed here, the per-query numbers are
+    build-free marginal costs whose attribution can't shift between
+    rounds. Every DataFrame a build returns is counted, so lazily
+    persisted halves (the MinHash candidate set) materialize here too."""
+    from pyspark.sql import DataFrame
 
-    from catalyst_spark.queries import ALL_QUERIES
-    from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.tables import load as _ld
+    from catalyst_spark.queries.pipeline import SHARED_BUILDS
 
     out: dict[str, float] = {}
-
-    def timed(name, fn):
+    for name, build in SHARED_BUILDS.items():
         t0 = time.perf_counter()
-        fn()
+        built = build(spark, sf_dir)
+        for part in built if isinstance(built, tuple) else (built,):
+            if isinstance(part, DataFrame):
+                part.count()
         out[name] = round(time.perf_counter() - t0, 3)
-
-    def noop(name):
-        return lambda: ALL_QUERIES[name](spark, sf_dir).write.format(
-            "noop").mode("overwrite").save()
-
-    docs = _ld(spark, sf_dir, "documents")
-    emb = _ld(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    timed("window_table", lambda: P._windowed(docs).persist().count())
-    # materialize BOTH persisted halves (signature table inside the
-    # call, candidate pair table via count) so consumers' numbers are
-    # build-free marginals
-    timed("minhash_signatures",
-          lambda: P._minhash_sig_cand(spark, sf_dir)[1].count())
-    timed("simhash_signatures", noop("text_simhash"))
-    timed("prefix_verified_pairs", noop("dedup_prefix_filter"))
-    timed("cc_labels", noop("dedup_clusters"))
-    # r14 fifth stint: the full verified MinHash pair set (stored
-    # verified corpus index + per-run-verified shard delta) feeds
-    # incremental_shard_apply, shard_apply_compaction AND
-    # incremental_shard_dedup through _TOPK_RESULT_CACHE
-    timed("mh_verified_pairs",
-          lambda: P._mh_verified_pairs(spark, sf_dir).count())
-    timed("coarse_kmeans_assign",
-          lambda: P._coarse_assign(spark, sf_dir, v).count())
-    # the re-k'd quantizer (k = _serving_k(N), model-store-backed):
-    # shared by ivf_rek_cell_stats and the ann_sq8_ivf_rek_* rungs
-    rek_k = P._serving_k(emb.count())
-    timed("rek_kmeans_assign",
-          lambda: P._coarse_assign(
-              spark, sf_dir, v, tag=f"full_k{rek_k}", k=rek_k).count())
-    timed("pq_codes", lambda: P._pq_model(spark, sf_dir, v)[0].count())
-    timed("rpq_codes", lambda: P._pq_model(
-        spark, sf_dir, P._residual_vecs(spark, sf_dir, v),
-        prefix="rpq")[0].count())
-    # the persisted ADC top-k RESULT (VERDICT r13 item 4): shared by
-    # ann_pq_adc_topk and ann_recall_ladder's PQ rung through
-    # _TOPK_RESULT_CACHE["pq_adc"], so window reorders used to shift a
-    # ~1.7 s first-toucher cost between the two names (r13's phantom
-    # 13x on ann_pq_adc_topk); with the result pre-built here both
-    # names read the persisted probe-set-sized table
-    timed("pq_adc_topk", noop("ann_pq_adc_topk"))
-    timed("brute_topk_baseline", noop("ann_brute_topk"))
-    # r14: the remaining uncached ladder rungs' probe-set-sized topk
-    # results joined the session cache (ivf / sq8 / the two IVF+SQ8
-    # tags) — each fed a standalone query AND a recall-ladder rung, so
-    # without a timer here the first toucher's name would absorb the
-    # build (the r13 pq_adc_topk phantom all over again)
-    timed("ivf_topk", noop("ann_ivf_topk"))
-    timed("sq8_topk", noop("ann_sq8_topk"))
-    timed("sq8_ivf_topk", noop("ann_sq8_ivf_topk"))
-    timed("sq8_ivf_rek_topk", noop("ann_sq8_ivf_rek_topk"))
-    # r14b: the residual-IVFADC top-k result is the last session-cached
-    # ANN build without its own timer — the ladder's residual rung and
-    # the standalone query share it, so first-toucher attribution would
-    # otherwise shift with window order (ann_ivfpq_topk needs no timer
-    # anymore: it reads the ivfpq_rerank_shortlist build's srank rows)
-    timed("ivfpq_residual_topk", noop("ann_ivfpq_residual_topk"))
-    # the exact-reranked IVF-PQ shortlist and the shingle-Jaccard
-    # lexical arm (VERDICT r8 item 4): each feeds the rerank rung AND
-    # both fusion variants, so their one-time build cost belongs here,
-    # not in whichever fusion slot the rotation runs first
-    timed("ivfpq_rerank_shortlist",
-          lambda: P._ivfpq_rerank_ranked(spark, sf_dir).count())
-    timed("fusion_lex_arm",
-          lambda: P._fusion_lex_arm(spark, sf_dir).count())
-    # r14c: the integer-fixpoint PageRank chain (_PR_CHAIN_CACHE) feeds
-    # near_dup_pagerank AND its converged twin — the last session-cached
-    # build whose ~2 s first-toucher cost still shifted with window order
-    timed("pr_chain", noop("near_dup_pagerank"))
-    # r14c: the verified pHash pair set joined the session cache (it
-    # feeds phash_dup_pairs AND phash_dup_clusters)
-    timed("phash_pairs", noop("phash_dup_pairs"))
     return out
 
 
@@ -1538,6 +1444,10 @@ def main() -> None:
 
     from catalyst_spark.session import get_spark
     from catalyst_spark.queries import ALL_QUERIES
+    from catalyst_spark.queries.pipeline import (
+        SHARED_BUILDS,
+        reset_session_caches,
+    )
 
     spark = get_spark("catalyst_spark_bench", cpus=cpus)
 
@@ -1555,40 +1465,14 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    # run the owners of session-shared builds FIRST so their one-time
-    # cost (verified prefix pairs, minhash signature index) is timed
-    # against the operator that owns it, not whichever downstream
-    # consumer happens to run first in registry order; consumers then
-    # show their true marginal cost.
-    # dedup_clusters owns the converged CC-label cache (consumed by
-    # keep_one/keep_best/rate_by_source/cluster_size_hist): running it
-    # third keeps that build's cost attributed to its owner no matter
-    # how the correctness-window rotation reorders the registry
-    _build_owners = ("dedup_prefix_filter", "dedup_minhash_pairs",
-                     "dedup_clusters")
-    ordered = [
-        *((n, ALL_QUERIES[n]) for n in _build_owners if n in ALL_QUERIES),
-        *((n, f) for n, f in ALL_QUERIES.items() if n not in _build_owners),
-    ]
-
-    def _reset_session_caches() -> None:
-        """Return the session to a cold state so every timing pass pays
-        the same costs. Delegates to the library's convention-driven
-        reset (every `_*_CACHE` dict + the Spark cache manager), so a
-        cache added later can't silently survive resets here and fake
-        the timings — tests/test_plans.py pins the enumeration."""
-        from catalyst_spark.queries.pipeline import reset_session_caches
-
-        reset_session_caches(spark)
-
     # --- scale-proof section (VERDICT r3 item 2): the dedup/similarity
     # family at a 10x corpus, with measured candidate-pair ratios. Runs
     # BEFORE the main passes so its timings aren't distorted by three
     # bench passes' worth of accumulated JVM/GC state. ---
     scale = None
     if os.environ.get("SPARK_GRAFT_SCALE_BENCH", "1") != "0":
-        scale = _scale_section(spark, sf_dir, _reset_session_caches)
-        _reset_session_caches()
+        scale = _scale_section(spark, sf_dir)
+        reset_session_caches(spark)
 
     # --- k=64 tier (VERDICT r9 item 7): the scan-dominated re-k
     # measurement at 100k vectors. Also before the main passes, and
@@ -1596,16 +1480,16 @@ def main() -> None:
     # a 50x corpus. ---
     rek64 = None
     if os.environ.get("SPARK_GRAFT_REK64_BENCH", "1") != "0":
-        rek64 = _rek64_section(spark, sf_dir, _reset_session_caches)
-        _reset_session_caches()
+        rek64 = _rek64_section(spark, sf_dir)
+        reset_session_caches(spark)
 
     # --- 50x tier (r11e): three-point scaling curve for the flagship
     # document/event operators. Default OFF (builder-measured into the
     # committed snapshot; the per-round driver run keeps 10x only). ---
     sf5 = None
     if os.environ.get("SPARK_GRAFT_SF5_BENCH", "0") != "0":
-        sf5 = _sf5_section(spark, sf_dir, _reset_session_caches)
-        _reset_session_caches()
+        sf5 = _sf5_section(spark, sf_dir)
+        reset_session_caches(spark)
 
     # --- ingest-side 50x tier (r13, VERDICT r12 item 8): fixed probe
     # stream vs 1x/10x/50x corpus indexes. Default follows the sf5
@@ -1616,16 +1500,15 @@ def main() -> None:
         "SPARK_GRAFT_STREAM_SCALE_BENCH",
         os.environ.get("SPARK_GRAFT_SF5_BENCH", "0"),
     ) != "0":
-        stream_scale = _stream_scale_section(
-            spark, sf_dir, _reset_session_caches)
-        _reset_session_caches()
+        stream_scale = _stream_scale_section(spark, sf_dir)
+        reset_session_caches(spark)
         # second family (r14): growing input vs bounded sketch state
         stream_scale_kmv = _stream_scale_kmv_section(spark, sf_dir)
-        _reset_session_caches()
+        reset_session_caches(spark)
 
     # median-of-n per query: one timing per pass, each pass fully cold, so
     # sub-second ambient noise can't masquerade as a regression while
-    # build-owner attribution stays identical in every pass
+    # shared-build attribution stays identical in every pass
     # default 5: an ambient-drift episode this round pushed six queries
     # past the 1.3x flag under median-of-3 (spreads 0.4-0.8 s) and all
     # six reverted at median-of-5; the soft deadline below degrades
@@ -1645,16 +1528,16 @@ def main() -> None:
     # passes with headroom
     deadline = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "1600"))
     bench_t0 = time.perf_counter()
-    samples: dict[str, list[float]] = {n: [] for n, _ in ordered}
-    sb_samples: dict[str, list[float]] = {n: [] for n in _SHARED_BUILDS}
+    samples: dict[str, list[float]] = {n: [] for n in ALL_QUERIES}
+    sb_samples: dict[str, list[float]] = {n: [] for n in SHARED_BUILDS}
     passes_done = 0
     for _ in range(runs):
-        _reset_session_caches()
+        reset_session_caches(spark)
         # shared builds first, each under its own named timer — the
         # query timings below are then build-free marginal costs
         for n, t in _time_shared_builds(spark, sf_dir).items():
             sb_samples[n].append(t)
-        for name, fn in ordered:
+        for name, fn in ALL_QUERIES.items():
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -2067,7 +1950,7 @@ def main() -> None:
             if payload["regressions"]:
                 # r13: the per-round driver-window reorder changes
                 # which registry member touches a session cache FIRST
-                # (the _*_CACHE families: pair tables, k-means models,
+                # (the shared builds: pair tables, k-means models,
                 # persisted top-k scans), so a flagged query may simply
                 # have inherited a cache-mate's scan this round —
                 # cross-check `value`/`queries_total` (whole-registry

@@ -25,13 +25,15 @@ from catalyst_spark.tables import load
 # what is saved is the per-call EAGER ANALYSIS of the fold expression
 # (type coercion over the nested named_struct lambda measured 2-6 s per
 # rebuild at any SF; execution of the analyzed plan is ~1 s at sf0.1).
-# Deliberately NOT named *_CACHE: reset_session_caches clears data
-# caches so every bench pass recomputes from parquet — this memo holds
-# no data, survives the reset by design, and is documented in
-# OPTIMIZATION_r14.md (a long-lived session analyzing the same query
-# once is the production behavior; re-analysis per pass is harness
-# overhead, not query work). The builders memoized here must stay
-# STATELESS: no persist/localCheckpoint/session-cache interaction.
+# Deliberately NOT a pipeline.shared_build: reset_session_caches
+# forgets the shared builds so every bench pass recomputes from parquet
+# — this memo holds no data, survives the reset by design, and is
+# documented in OPTIMIZATION_r14.md (a long-lived session analyzing the
+# same query once is the production behavior; re-analysis per pass is
+# harness overhead, not query work). The builders memoized here must
+# stay STATELESS: no persist/localCheckpoint/shared-build interaction —
+# the reset unpersists every RDD, so a memoized frame over checkpointed
+# rows would lose its blocks.
 _FOLD_PLAN_MEMO: dict = {}
 
 

@@ -56,10 +56,6 @@ GTS_WITH_ERROR_SCHEMA = T.StructType(
 )
 
 
-def empty_labels() -> Column:
-    return F.create_map().cast("map<string,string>")
-
-
 def gts_columns(
     ts: Column,
     name: Column,

@@ -120,19 +120,3 @@ def latest_per_series(df: DataFrame) -> DataFrame:
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def series_downsample(df: DataFrame, bucket_s: int = 300) -> DataFrame:
-    """Per-series fixed-window downsample over the store."""
-    bucket = (F.floor(F.col("ts") / (bucket_s * 1_000_000)) * bucket_s).alias(
-        "bucket_s"
-    )
-    return (
-        df.groupBy("name", bucket)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value_d"), 6).alias("sum_d"),
-            F.max("value_l").alias("max_l"),
-        )
-        .orderBy("name", "bucket_s")
-    )

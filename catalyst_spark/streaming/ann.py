@@ -78,11 +78,7 @@ def pq_static_index(spark: SparkSession, sf_dir: str):
     bloom_filter_words' 32 KB filter; the codes table never does."""
     from catalyst_spark.queries.pipeline import _pq_model
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    codes, cent = _pq_model(spark, sf_dir, v)
+    codes, cent = _pq_model(spark, sf_dir)
     entries = [(int(r["m"]), int(r["code"]), list(r["ce"]))
                for r in cent.collect()]
     return codes, entries
@@ -96,20 +92,16 @@ def ivfpq_static_index(spark: SparkSession, sf_dir: str):
     assignment, so the stream side can equi-join on c_id and touch
     ONLY the probed cells' codes; both entries lists are model-sized."""
     from catalyst_spark.queries.pipeline import (
-        _cached_kmeans,
         _coarse_assign,
+        _kmeans_model,
         _pq_model,
     )
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    codes, cent = _pq_model(spark, sf_dir, v)
-    codes_cells = codes.join(_coarse_assign(spark, sf_dir, v), "vec_id")
+    codes, cent = _pq_model(spark, sf_dir)
+    codes_cells = codes.join(_coarse_assign(spark, sf_dir), "vec_id")
     entries = [(int(r["m"]), int(r["code"]), list(r["ce"]))
                for r in cent.collect()]
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
+    C, cids = _kmeans_model(spark, sf_dir)
     coarse = [(int(cids[i]), [float(x) for x in C[i]])
               for i in range(len(cids))]
     return codes_cells, entries, coarse
@@ -125,7 +117,7 @@ def _stream_probe_top2(vec_stream: DataFrame, coarse_entries: list) -> DataFrame
     from BLAS in the last ulps, so a near-equidistant query could probe
     a different second cell than batch). The centroid matrix is
     model-sized and rides into the Arrow-batched closure; entries order
-    is `_cached_kmeans`'s (C, cids) order, reproducing the batch
+    is `_kmeans_model`'s (C, cids) order, reproducing the batch
     distance-matrix column order exactly. Emits one row per query:
     (q_id, e, cells array<bigint>)."""
     import numpy as np
@@ -251,18 +243,10 @@ def sq8_static_index(spark: SparkSession, sf_dir: str):
     (codes static DataFrame, mins list, rngs list). The range arrays
     are model-sized (two 64-float lists) and ride into the stream plan
     as one broadcast literal row."""
-    from catalyst_spark.queries.pipeline import _sq8_codes
+    from catalyst_spark.queries.pipeline import _sq8_codes, _sq8_ranges
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    dims = v.select(F.posexplode("e").alias("d0", "x")).groupBy("d0").agg(
-        F.min("x").alias("mn"), F.max("x").alias("mx")
-    ).orderBy("d0").collect()
-    mins = [float(r["mn"]) for r in dims]
-    rngs = [float(r["mx"]) - float(r["mn"]) for r in dims]
-    return _sq8_codes(spark, sf_dir, v), mins, rngs
+    mins, rngs = _sq8_ranges(spark, sf_dir)
+    return _sq8_codes(spark, sf_dir), mins, rngs
 
 
 def _sq8_topk_update(
@@ -353,24 +337,17 @@ def sq8_ivf_static_index(spark: SparkSession, sf_dir: str):
     quantizer ranges, and the coarse centroid entries — the stream side
     equi-joins on c_id and scores integers only."""
     from catalyst_spark.queries.pipeline import (
-        _cached_kmeans,
         _coarse_assign,
+        _kmeans_model,
         _sq8_codes,
+        _sq8_ranges,
     )
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    mins, rngs = _sq8_ranges(spark, sf_dir)
+    codes_cells = _sq8_codes(spark, sf_dir).join(
+        _coarse_assign(spark, sf_dir), "vec_id"
     )
-    dims = v.select(F.posexplode("e").alias("d0", "x")).groupBy("d0").agg(
-        F.min("x").alias("mn"), F.max("x").alias("mx")
-    ).orderBy("d0").collect()
-    mins = [float(r["mn"]) for r in dims]
-    rngs = [float(r["mx"]) - float(r["mn"]) for r in dims]
-    codes_cells = _sq8_codes(spark, sf_dir, v).join(
-        _coarse_assign(spark, sf_dir, v), "vec_id"
-    )
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
+    C, cids = _kmeans_model(spark, sf_dir)
     coarse = [(int(cids[i]), [float(x) for x in C[i]])
               for i in range(len(cids))]
     return codes_cells, mins, rngs, coarse
@@ -492,28 +469,21 @@ def rivfpq_static_index(spark: SparkSession, sf_dir: str):
     residual-space PQ codes joined with their coarse cell (one hash
     join against the persisted assignment), the residual codebook
     entries, and the coarse centroid entries. Every trained piece
-    comes through `_pq_model(prefix="rpq")` / `_cached_kmeans`, i.e.
+    comes through `_pq_model(prefix="rpq")` / `_kmeans_model`, i.e.
     the on-disk model store — a fresh serving session loads the
     persisted index instead of retraining, the train-once/serve-months
     shape. Both entries lists are model-sized."""
     from catalyst_spark.queries.pipeline import (
-        _cached_kmeans,
         _coarse_assign,
+        _kmeans_model,
         _pq_model,
-        _residual_vecs,
     )
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    rcodes, rcent = _pq_model(
-        spark, sf_dir, _residual_vecs(spark, sf_dir, v), prefix="rpq"
-    )
-    rcodes_cells = rcodes.join(_coarse_assign(spark, sf_dir, v), "vec_id")
+    rcodes, rcent = _pq_model(spark, sf_dir, "rpq")
+    rcodes_cells = rcodes.join(_coarse_assign(spark, sf_dir), "vec_id")
     entries = [(int(r["m"]), int(r["code"]), list(r["ce"]))
                for r in rcent.collect()]
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
+    C, cids = _kmeans_model(spark, sf_dir)
     coarse = [(int(cids[i]), [float(x) for x in C[i]])
               for i in range(len(cids))]
     return rcodes_cells, entries, coarse
@@ -1454,17 +1424,11 @@ def prototype_gate_index(spark, sf_dir: str):
     gets the keep-everything sentinel (cut_d2 = -1 < any real squared
     distance) rather than a KeyError (ADVICE r11)."""
     from catalyst_spark.queries.pipeline import (
-        _cached_kmeans,
         _cluster_keep_cutoffs,
-        load,
+        _kmeans_model,
     )
-    from pyspark.sql import functions as F
 
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
+    C, cids = _kmeans_model(spark, sf_dir)
     cuts = {r["c_id"]: (float(r["cut_d2"]), int(r["cut_vid"]))
             for r in _cluster_keep_cutoffs(spark, sf_dir)}
     keep_all = (-1.0, -1)  # empty cell: quota unfilled, keep everything
@@ -1543,15 +1507,12 @@ def mrl_static_index(spark: SparkSession, sf_dir: str):
     bit-identical)."""
     from catalyst_spark.queries.pipeline import (
         _MRL_SERVE_DIM,
-        _cached_kmeans,
         _coarse_assign,
+        _kmeans_model,
         _with_norm,
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
     d = _MRL_SERVE_DIM
     trunc_cells = (
         emb.select(
@@ -1563,10 +1524,10 @@ def mrl_static_index(spark: SparkSession, sf_dir: str):
         .withColumn("vc16_norm", F.sqrt(F.expr(
             "aggregate(vc16, cast(0 as double), (s, x) -> s + x * x)"
         )))
-        .join(_coarse_assign(spark, sf_dir, v)
+        .join(_coarse_assign(spark, sf_dir)
               .select(F.col("vec_id").alias("n_id"), "c_id"), "n_id")
     )
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
+    C, cids = _kmeans_model(spark, sf_dir)
     coarse = [(int(cids[i]), [float(x) for x in C[i]])
               for i in range(len(cids))]
     vecs_norm = _with_norm(emb, "n_id", "vc").drop("n_id_label")

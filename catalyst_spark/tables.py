@@ -62,14 +62,14 @@ _SPREAD_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 # this is plan reuse, the in-code equivalent of the guide's file-listing
 # cache (opt guide §6). Keyed by applicationId so a new session (new
 # JVM, possibly changed files) never sees a stale relation.
-_RELATION_CACHE: dict = {}
+_RELATION_MEMO: dict = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str,
          spread: bool = True) -> DataFrame:
     want_spread = spread and name in _SPREAD_KEYS
     key = (spark.sparkContext.applicationId, sf_dir, name, want_spread)
-    hit = _RELATION_CACHE.get(key)
+    hit = _RELATION_MEMO.get(key)
     if hit is not None:
         return hit
     if want_spread:
@@ -79,7 +79,7 @@ def load(spark: SparkSession, sf_dir: str, name: str,
         par = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < par:
             df = df.repartition(par, _SPREAD_KEYS[name])
-        _RELATION_CACHE[key] = df
+        _RELATION_MEMO[key] = df
         return df
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
@@ -98,7 +98,7 @@ def load(spark: SparkSession, sf_dir: str, name: str,
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _RELATION_CACHE[key] = df
+    _RELATION_MEMO[key] = df
     return df
 
 

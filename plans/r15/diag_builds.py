@@ -26,7 +26,6 @@ def main() -> int:
     mode = sys.argv[1]
     from catalyst_spark.session import get_spark
     from catalyst_spark.queries import ALL_QUERIES
-    from catalyst_spark.queries import pipeline as P
     from catalyst_spark.queries.pipeline import reset_session_caches
 
     spark = get_spark("diag_r15", cpus=int(
@@ -38,14 +37,7 @@ def main() -> int:
 
     if mode == "cc":
         from pyspark.sql import functions as F
-        # instrument the loop by monkey-patching localCheckpoint timing
         import catalyst_spark.queries.pipeline as pl
-
-        def timed_cc(pairs, keyed=False):
-            t0 = time.perf_counter()
-            fn = pl._cc_labels_keyed if keyed else pl._cc_labels
-            out = fn(spark, pairs)
-            return time.perf_counter() - t0
 
         reset_session_caches(spark)
         pairs = pl.dedup_prefix_filter(spark, SF_DIR)

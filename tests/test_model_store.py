@@ -21,27 +21,16 @@ def _vec(spark):
     )
 
 
-def _clear_session_caches():
-    import catalyst_spark.queries.pipeline as P
-
-    for cache in (P._KMEANS_MODEL_CACHE, P._TOPK_RESULT_CACHE,
-                  P._EMB_FP_CACHE):
-        for val in cache.values():
-            try:
-                val.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-
-
 @pytest.fixture
-def fresh_store(tmp_path, monkeypatch):
+def fresh_store(spark, tmp_path, monkeypatch):
     """Empty model store + empty session caches before AND after, so
     this test never leaks trained state into the session-scoped dir."""
+    from catalyst_spark.queries.pipeline import reset_session_caches
+
     monkeypatch.setenv("CATALYST_ANN_MODEL_DIR", str(tmp_path / "models"))
-    _clear_session_caches()
+    reset_session_caches(spark)
     yield tmp_path / "models"
-    _clear_session_caches()
+    reset_session_caches(spark)
 
 
 def test_fresh_session_reuses_stored_model_bit_exactly(
@@ -50,15 +39,14 @@ def test_fresh_session_reuses_stored_model_bit_exactly(
     import catalyst_spark.queries.pipeline as P
     from catalyst_spark import model_store
 
-    v = _vec(spark)
-    C_a, cids_a = P._cached_kmeans(spark, SF_DIR, v, "full")
-    codes_a, _ = P._pq_model(spark, SF_DIR, v)
+    C_a, cids_a = P._kmeans_model(spark, SF_DIR)
+    codes_a, _ = P._pq_model(spark, SF_DIR)
     rows_a = sorted(tuple(r) for r in codes_a.collect())
     topk_a = [tuple(r) for r in P.ann_pq_adc_topk(spark, SF_DIR).collect()]
 
     # "fresh session": drop every in-memory cache, then forbid training —
     # any refit or re-save proves the store was not used
-    _clear_session_caches()
+    P.reset_session_caches(spark)
 
     def _no(*a, **k):
         raise AssertionError("model store miss: refit attempted")
@@ -67,10 +55,10 @@ def test_fresh_session_reuses_stored_model_bit_exactly(
     monkeypatch.setattr(model_store, "save_kmeans", _no)
     monkeypatch.setattr(model_store, "save_codes", _no)
 
-    C_b, cids_b = P._cached_kmeans(spark, SF_DIR, v, "full")
+    C_b, cids_b = P._kmeans_model(spark, SF_DIR)
     assert (C_a == C_b).all() and (cids_a == cids_b).all()  # bit-exact
 
-    codes_b, _ = P._pq_model(spark, SF_DIR, v)
+    codes_b, _ = P._pq_model(spark, SF_DIR)
     assert sorted(tuple(r) for r in codes_b.collect()) == rows_a
 
     topk_b = [tuple(r) for r in P.ann_pq_adc_topk(spark, SF_DIR).collect()]
@@ -83,7 +71,7 @@ def test_stale_fingerprint_is_ignored(spark, fresh_store):
 
     v = _vec(spark)
     fp = model_store.embeddings_fingerprint(v)
-    C, cids = P._cached_kmeans(spark, SF_DIR, v, "full")
+    P._kmeans_model(spark, SF_DIR)
     assert model_store.load_kmeans(SF_DIR, "full", fp) is not None
     stale = [fp[0] + 1, fp[1], fp[2]]  # regenerated-data fingerprint
     assert model_store.load_kmeans(SF_DIR, "full", stale) is None
@@ -101,7 +89,7 @@ def test_changed_train_params_invalidate_stored_model(
 
     v = _vec(spark)
     fp = model_store.embeddings_fingerprint(v)
-    P._cached_kmeans(spark, SF_DIR, v, "full")
+    P._kmeans_model(spark, SF_DIR)
     assert model_store.load_kmeans(SF_DIR, "full", fp) is not None
     monkeypatch.setattr(P, "_KMEANS_ITERS", P._KMEANS_ITERS + 1)
     assert model_store.load_kmeans(SF_DIR, "full", fp) is None

@@ -325,19 +325,13 @@ def test_prefix_filter_dft_broadcast_budget_enforced(spark, monkeypatch):
     verified pairs must be identical either way."""
     from catalyst_spark.queries import pipeline as p
 
-    def fresh():
-        for df in p._PREFIX_PAIRS_CACHE.values():
-            df.unpersist()
-        p._PREFIX_PAIRS_CACHE.clear()
-        spark.catalog.clearCache()
-
-    fresh()
+    p.reset_session_caches(spark)
     want = [tuple(r) for r in ALL_QUERIES["dedup_prefix_filter"](spark, SF_DIR).collect()]
-    fresh()
+    p.reset_session_caches(spark)
     monkeypatch.setattr(p, "_DF_T_BROADCAST_BUDGET", 0)
     got_df = ALL_QUERIES["dedup_prefix_filter"](spark, SF_DIR)
     assert [tuple(r) for r in got_df.collect()] == want
-    fresh()
+    p.reset_session_caches(spark)
 
 
 def test_ivfpq_cell_pruned_codes_scan(spark):
@@ -463,25 +457,26 @@ def test_all_query_plans_no_cartesian_no_rowwise_python(spark):
     assert not bad, bad
 
 
-def test_reset_session_caches_covers_every_module_cache(spark):
-    """Bench timing attribution depends on resets actually clearing
-    every session cache: populate the shared builds, reset, and assert
-    every `_*_CACHE` dict in the pipeline module is empty."""
+def test_reset_session_caches_releases_every_shared_build(spark):
+    """Bench timing attribution and a leak-free long-running session
+    both depend on resets actually returning the session to cold:
+    populate the shared builds (k-means and PQ models, top-k results,
+    prefix pairs, CC labels with their localCheckpoint rounds, the
+    PageRank chain), reset, and assert the memo is empty AND no RDD is
+    left persisted — checkpointed rank and label tables included."""
     from catalyst_spark.queries import pipeline as p
 
-    from catalyst_spark.queries import pipeline as _pq
-    _pq.ann_pq_recall(spark, SF_DIR).collect()                # models+topk
+    p.ann_pq_recall(spark, SF_DIR).collect()                  # models+topk
     ALL_QUERIES["dedup_clusters"](spark, SF_DIR).collect()    # pairs+labels
-    populated = [
-        name for name in dir(p)
-        if name.endswith("_CACHE") and isinstance(getattr(p, name), dict)
-        and getattr(p, name)
-    ]
-    assert populated  # the builds above must land in the caches
+    ALL_QUERIES["near_dup_pagerank"](spark, SF_DIR).collect()  # rank chain
+    built = {key[2] for key in p._SHARED_MEMO}
+    assert {"pq_books", "pq_model", "ann_pq_adc_topk", "ann_brute_topk",
+            "dedup_prefix_filter", "dedup_clusters", "pr_chain"} <= built
+    jsc = spark.sparkContext._jsc
+    assert jsc.getPersistentRDDs().size() > 0
     p.reset_session_caches(spark)
-    for name in dir(p):
-        if name.endswith("_CACHE") and isinstance(getattr(p, name), dict):
-            assert not getattr(p, name), name
+    assert not p._SHARED_MEMO
+    assert jsc.getPersistentRDDs().size() == 0
 
 
 def test_hamming_band_joins_are_equi_joins(spark):

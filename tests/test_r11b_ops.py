@@ -20,12 +20,9 @@ def test_cluster_balanced_sample_quota_arithmetic(spark):
     always survive), ranks run 1..quota, and the kept members are the
     cell's d2-largest under the (d2 DESC, vec_id) order."""
     from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.tables import load
     from pyspark.sql import functions as F
 
-    v = load(spark, SF_DIR, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    assign = P._coarse_assign(spark, SF_DIR, v)
+    assign = P._coarse_assign(spark, SF_DIR)
     sizes = {r["c_id"]: r["n"] for r in
              assign.groupBy("c_id").agg(
                  F.count(F.lit(1)).alias("n")).collect()}
@@ -63,10 +60,10 @@ def test_cluster_balanced_sample_keeps_least_prototypical(spark):
     emb = load(spark, SF_DIR, "embeddings")
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    C, cids = P._cached_kmeans(spark, SF_DIR, v, "full")
+    C, cids = P._kmeans_model(spark, SF_DIR)
     cent = {int(c): np.asarray(row) for c, row in zip(cids, C)}
     assign = {r["vec_id"]: r["c_id"]
-              for r in P._coarse_assign(spark, SF_DIR, v).collect()}
+              for r in P._coarse_assign(spark, SF_DIR).collect()}
     vecs = {r["vec_id"]: np.asarray(r["e"]) for r in v.collect()}
     kept = {r["vec_id"] for r in
             P.cluster_balanced_sample(spark, SF_DIR).collect()}
@@ -175,7 +172,7 @@ def test_ann_mrl_rerank_serves_from_probed_cells_only(spark):
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"))
     assign = {r["vec_id"]: r["c_id"]
-              for r in P._coarse_assign(spark, SF_DIR, v).collect()}
+              for r in P._coarse_assign(spark, SF_DIR).collect()}
     probed = {}
     for r in P._probe_top2(spark, SF_DIR, v).collect():
         probed.setdefault(r["q_id"], set()).add(r["c_id"])

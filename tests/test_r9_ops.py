@@ -234,11 +234,12 @@ def test_top_token_fold_matches_quadratic_shape(spark):
     assert [r["fold"] for r in out] == [3, 1, 4, 1, 1, 2]
 
 
-def test_shard_apply_serves_persisted_index(spark):
+def test_shard_apply_serves_persisted_index(spark, monkeypatch):
     """VERDICT r8 item 3: the corpus-side edge index must be READ from
     the model store, not band-join recomputed. Proof: after one build,
-    a fresh (cache-cleared) call with a poisoned `bands` argument still
-    serves the index — the warm path never touches the corpus join —
+    a fresh (reset) call with the MinHash signature build forbidden
+    still serves the index — the warm path never touches the corpus
+    join —
     and the artifact sits under the model-store convention with the
     banding params in its metadata."""
     import json
@@ -258,11 +259,16 @@ def test_shard_apply_serves_persisted_index(spark):
     # the embeddings-fingerprint GC pass never reaps this index
     assert m["fp_of"] == "documents"
 
-    key = (spark.sparkContext.applicationId, SF_DIR, "corpus_band_index")
-    P._TOPK_RESULT_CACHE.pop(key, None)
-    idx = P._corpus_band_index(spark, SF_DIR, bands=None)  # must not touch
-    assert {r["a_id"] for r in idx.collect()} is not None
-    P._TOPK_RESULT_CACHE.pop(key, None)
+    P.reset_session_caches(spark)
+
+    def _no(*a, **k):
+        raise AssertionError("corpus band join recomputed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(P, "_minhash_sig_cand", _no)
+        idx = P._corpus_band_index(spark, SF_DIR)
+        assert {r["a_id"] for r in idx.collect()} is not None
+    P.reset_session_caches(spark)
     out2 = P.incremental_shard_apply(spark, SF_DIR).collect()
     assert out1 == out2
 
